@@ -24,14 +24,12 @@ import org.apache.spark.sql.functions.col
   * measured ~12 ms per call under the bench session, paid on every
   * minhash/simhash/kmeans construction. For the common shape — narrow
   * ops over ONE file relation — the width is now computed from the
-  * relation's (cached) file listing with Spark's own split formula
-  * (maxSplitBytes = min(maxPartitionBytes, max(openCost, paddedBytes /
-  * defaultParallelism)), greedy size-descending packing), no planning at
-  * all; anything else (joins, cached frames, shuffles upstream) falls
-  * back to the physical probe. The decision threshold is 2x, so the
-  * formula's ±1-partition approximation cannot flip it: local
-  * single-row-group scans probe 1-3 either way, production scans probe
-  * in the thousands.
+  * relation's (cached) file listing with the helpers Spark's file scan
+  * itself uses (`FilePartition.maxSplitBytes`,
+  * `PartitionedFileUtil.splitFiles`, `FilePartition.getFilePartitions`),
+  * no planning at all, so it equals the physical width for an
+  * unfiltered scan; anything else (joins, cached frames, shuffles
+  * upstream) falls back to the physical probe.
   */
 object Spread {
 
@@ -41,9 +39,10 @@ object Spread {
   private def plannedWidth(df: DataFrame): Int =
     fileScanWidth(df).getOrElse(df.rdd.getNumPartitions)
 
-  private def fileScanWidth(df: DataFrame): Option[Int] = {
+  private[operators] def fileScanWidth(df: DataFrame): Option[Int] = {
     import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.PartitionedFileUtil
+    import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
     val session = df.sparkSession
     def walk(p: LogicalPlan): Option[HadoopFsRelation] = p match {
       case Project(_, c) => walk(c)
@@ -58,34 +57,19 @@ object Spread {
         }
       case _ => None
     }
-    walk(df.queryExecution.logical).map { fs =>
-      val conf = session.sessionState.conf
-      val open = conf.filesOpenCostInBytes
-      val maxB = conf.filesMaxPartitionBytes
-      val minParts = conf.filesMinPartitionNum
-        .getOrElse(session.sparkContext.defaultParallelism)
+    walk(df.queryExecution.analyzed).map { fs =>
       // the file listing is cached by the relation's FileIndex — reading
       // it is a map lookup after the first scan of the table
-      val sizes = fs.location.listFiles(Nil, Nil)
-        .flatMap(_.files).map(_.getLen).filter(_ > 0L)
-      if (sizes.isEmpty) 0
-      else {
-        val padded = sizes.map(_ + open).sum
-        val maxSplit = math.min(maxB,
-          math.max(open, padded / math.max(1, minParts)))
-        // split oversized files, then pack size-descending (Spark's
-        // FilePartition.getFilePartitions shape)
-        val pieces = sizes.flatMap { len =>
-          val k = ((len + maxSplit - 1) / maxSplit).toInt
-          Seq.fill(k - 1)(maxSplit) :+ (len - maxSplit * (k - 1))
+      val dirs = fs.location.listFiles(Nil, Nil)
+      val maxSplit = FilePartition.maxSplitBytes(session, dirs)
+      val splits = dirs.flatMap { dir =>
+        dir.files.flatMap { f =>
+          PartitionedFileUtil.splitFiles(f, f.getPath,
+            fs.fileFormat.isSplitable(session, fs.options, f.getPath),
+            maxSplit, dir.values)
         }
-        var width = 0
-        var cur = Long.MaxValue
-        pieces.map(_ + open).sortBy(-_).foreach { p =>
-          if (cur + p > maxSplit) { width += 1; cur = p } else cur += p
-        }
-        width
-      }
+      }.sortBy(_.length)(Ordering[Long].reverse)
+      FilePartition.getFilePartitions(session, splits, maxSplit).size
     }
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 import graft.functions.expressions.{BpeCountExpression, BpeEncodeExpression, DotProduct, RollingHashExpression, SpaceSavingTopK, SpanHashesExpression, TopKByScore, WinnowHashesExpression, ZOrderExpression}
+import graft.streaming.LocalCheckpointFileManager
 
 /** Session extension registering the engine's custom Catalyst expressions
   * as SQL functions, so the SQL surface is at parity with the Column API:
@@ -16,6 +17,9 @@ import graft.functions.expressions.{BpeCountExpression, BpeEncodeExpression, Dot
   * `spark.sql.extensions=graft.plans.GraftExtensions` — the standard
   * SparkSessionExtensions injection point (SURVEY.md §7: custom code path
   * (c)).
+  *
+  * It also makes [[graft.streaming.LocalCheckpointFileManager]] the
+  * session's default streaming checkpoint file manager.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -30,6 +34,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(e: SparkSessionExtensions): Unit = {
+    // Spark has no extension hook for conf defaults. The parser builder
+    // runs once per session state, before any query is parsed or a
+    // Hadoop conf is derived from the session, so it installs the
+    // checkpoint manager there and returns the parser unchanged.
+    // setIfUnset keeps an explicit choice (spark.hadoop.* or the SQL
+    // conf, which newHadoopConf layers on top) in charge.
+    e.injectParser { (session, parser) =>
+      LocalCheckpointFileManager.install(session.sparkContext.hadoopConfiguration)
+      parser
+    }
+
     e.injectFunction((
       new FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),

@@ -187,16 +187,19 @@ object StreamGate {
     * source/output dirs) — override: SPARK_GRAFT_STREAM_SCRATCH. These
     * trees live for exactly one bounded run and are deleted in the same
     * call (see [[runBounded]]/[[runBoundedResume]]), so they are shuffle-
-    * scratch-class state, not durable checkpoints: node-local fast
-    * storage is the right home (guide §5/§6 — the state store commits a
-    * delta file per partition per micro-batch into this tree, and the
-    * offset/commit WALs land here too). Default: `java.io.tmpdir` — a
-    * tmpfs root (/dev/shm) was A/B'd this round and measured NEUTRAL on
-    * the stateful gate queries (4 alternated JobProfile sets, mins
-    * 2.93-3.19 s both ways: the page cache already absorbs these
-    * unsynced small writes), so the default stays the least surprising
-    * location and the knob exists for hosts where local disk is actually
-    * slow, or for a deployment that wants the durable-FS semantics. */
+    * scratch-class state, not durable checkpoints: node-local storage is
+    * the right home (the state store commits a delta file per partition
+    * per micro-batch into this tree, and the offset/commit WALs land here
+    * too). Default: `java.io.tmpdir`. A tmpfs root (/dev/shm) was A/B'd
+    * and measured NEUTRAL on the stateful gate queries because the
+    * per-batch floor was never the disk: without the Hadoop native
+    * library, Spark's default checkpoint manager has Hadoop's local
+    * filesystem fork `chmod` for every checkpoint file and directory it
+    * creates and `readlink` on every rename, and a fork costs the same
+    * on any mount. Engine sessions write `file:` checkpoints through
+    * [[LocalCheckpointFileManager]], which does not fork; the knob is for
+    * hosts where local disk is actually slow, or for a deployment that
+    * wants the durable-FS semantics. */
   private[streaming] lazy val scratchRoot: java.nio.file.Path = {
     val p = sys.env.get("SPARK_GRAFT_STREAM_SCRATCH")
       .map(Paths.get(_))

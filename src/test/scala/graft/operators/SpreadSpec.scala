@@ -65,6 +65,40 @@ class SpreadSpec extends SparkSpec {
     } finally graft.streaming.StreamGate.deleteRecursively(dir)
   }
 
+  test("plan-free width equals the physical width on single- and multi-file scans") {
+    // single-file fixture tables: one split each, so the repartition fires
+    Seq(graft.sources.Tables.documents(spark, sfDir),
+        graft.sources.Tables.lineitem(spark, sfDir)).foreach { df =>
+      assert(Spread.fileScanWidth(df) == Some(1))
+      assert(df.rdd.getNumPartitions == 1)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("spread-multi")
+    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    try {
+      spark.range(20000).selectExpr("id AS doc_id", "uuid() AS text")
+        .repartition(6).write.mode("overwrite").parquet(dir.toString)
+      // (max partition bytes, open cost): files split into several
+      // pieces; pieces packed several to a partition; Spark's defaults
+      val widths = Seq(("16k", "1k"), ("64k", "8k"), (null, null)).map {
+        case (maxBytes, openCost) =>
+          keys.zip(Seq(maxBytes, openCost)).foreach {
+            case (k, null) => spark.conf.unset(k)
+            case (k, v) => spark.conf.set(k, v)
+          }
+          // a fresh frame per setting: Dataset.rdd is memoized
+          val df = spark.read.parquet(dir.toString)
+          val physical = df.rdd.getNumPartitions
+          assert(Spread.fileScanWidth(df) == Some(physical),
+            s"maxPartitionBytes=$maxBytes openCost=$openCost")
+          physical
+      }
+      assert(widths.head > 6, s"files must split at the lowest setting: $widths")
+    } finally {
+      keys.foreach(spark.conf.unset)
+      graft.streaming.StreamGate.deleteRecursively(dir)
+    }
+  }
+
   test("ParquetFooter.rowCount matches df.count for file and directory layouts") {
     val file = s"$sfDir/documents.parquet"
     val expected = spark.read.parquet(file).count()
